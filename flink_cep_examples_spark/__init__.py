@@ -19,4 +19,8 @@ Spark-first:
   column plumbing — all designed scale-out-first.
 """
 
+from flink_cep_examples_spark import _filestat
+
+_filestat.install()
+
 __version__ = "0.1.0"

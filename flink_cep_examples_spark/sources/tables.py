@@ -6,6 +6,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from flink_cep_examples_spark._filestat import stat_signature
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -29,8 +31,9 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
 
 
-#: (path → StructType) parquet-footer memo — metadata only, see
-#: load_table. Keyed by full path so distinct SF dirs never collide.
+#: ((path, st_mtime_ns, st_size) → StructType) parquet-footer memo —
+#: metadata only, see load_table. Keyed by full path so distinct SF dirs
+#: never collide, and by file identity so a rewritten file is re-read.
 _SCHEMA_CACHE: dict = {}
 
 
@@ -52,14 +55,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     launches a footer-read job at PLAN-CONSTRUCTION time, so a query
     referencing N tables paid N driver jobs per invocation before any
     data moved. The cache holds metadata only (a StructType — never
-    rows), is per-process, and the first read each process still reads
-    the real footer, so a changed file is picked up by a fresh run."""
+    rows), is per-process, and is keyed on the path's
+    ``(st_mtime_ns, st_size)`` too, so a file rewritten at the same
+    path is read afresh. A path that cannot be stat'ed (a remote URI)
+    is not memoized."""
     ensure_session_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
-    schema = _SCHEMA_CACHE.get(path)
+    sig = stat_signature(path)
+    key = (path, sig)
+    schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
+        if sig is not None:
+            _SCHEMA_CACHE[key] = df.schema
     else:
         df = spark.read.schema(schema).parquet(path)
     if name == "events":

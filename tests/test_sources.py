@@ -5,6 +5,10 @@ comparison depends on it."""
 
 from __future__ import annotations
 
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
 
@@ -35,3 +39,28 @@ def test_loader_self_heals_plain_session(spark, sf_small, name):
     df = load_table(spark, sf_small, name)
     assert df.count() > 0
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+def test_schema_memo_is_keyed_on_file_identity(spark, tmp_path):
+    """The footer-schema memo must not serve a stale schema for a file
+    rewritten at the same path in one session, and an unchanged file
+    must still hit the memo: no footer-read job at construction."""
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+
+    sc = spark.sparkContext
+    sc.setJobGroup("schema-memo-hit", "memo hit")
+    try:
+        assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("schema-memo-hit") == []
+
+    st = os.stat(path)
+    pq.write_table(pa.table({"b": ["x"], "c": [3.5]}), path)
+    # a same-second rewrite must still count: pin a distinct mtime
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["b", "c"]
+    assert [tuple(r) for r in df.collect()] == [("x", 3.5)]
