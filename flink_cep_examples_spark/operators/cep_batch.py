@@ -40,6 +40,7 @@ from flink_cep_examples_spark.plans.pattern import (
 )
 from flink_cep_examples_spark.operators import nfa
 from flink_cep_examples_spark.schemas import MATCH_TAG, TIMEOUT_TAG
+from flink_cep_examples_spark.sqltext import ident, idents
 
 _PRED_PREFIX = "__cep_p_"
 _TS_COL = "__cep_ts_ms"
@@ -349,6 +350,11 @@ def all_rows_output_schema(df: DataFrame, spec: PatternSpec) -> T.StructType:
     )
 
 
+def _ts_sql(spec) -> str:
+    """Epoch-µs event time of ``spec.order_col`` as SQL text."""
+    return f"unix_micros(CAST({ident(spec.order_col)} AS TIMESTAMP_LTZ))"
+
+
 def _with_nav_cols(df: DataFrame, spec: PatternSpec) -> DataFrame:
     """Materialize PREV()/NEXT() navigation as lag/lead columns over
     the (key, order, tiebreak) window — the same ordering the NFA
@@ -358,36 +364,49 @@ def _with_nav_cols(df: DataFrame, spec: PatternSpec) -> DataFrame:
     shuffle total, plan-audited)."""
     if not spec.nav_cols:
         return df
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*spec.key_cols).orderBy(
-        F.col(spec.order_col).cast(T.TimestampType()), spec.tiebreak_col
+    w = (
+        f"PARTITION BY {idents(spec.key_cols)} ORDER BY "
+        f"CAST({ident(spec.order_col)} AS TIMESTAMP_LTZ), "
+        f"{ident(spec.tiebreak_col)}"
     )
-    return df.select(
+    return df.selectExpr(
         "*",
         *[
-            (F.lag if kind == "prev" else F.lead)(src, off)
-            .over(w)
-            .alias(alias)
+            f"{'lag' if kind == 'prev' else 'lead'}({ident(src)}, {off}) "
+            f"OVER ({w}) AS {ident(alias)}"
             for alias, src, off, kind in spec.nav_cols
         ],
     )
 
 
+def _pred_cols(spec) -> list[str]:
+    return [
+        f"({e}) AS {_PRED_PREFIX}{i}" for i, e in enumerate(spec.pred_exprs)
+    ]
+
+
 def _prepare(df: DataFrame, spec: PatternSpec) -> DataFrame:
-    """Add vectorized predicate booleans + epoch-ms timestamp. Catalyst
-    prunes every column the measures/keys don't need."""
-    df = _with_nav_cols(df, spec)
+    """Add vectorized predicate booleans + epoch-µs timestamp, keeping
+    only the columns the keys, tiebreak and measures need — one SQL
+    projection (two with PREV/NEXT navigation)."""
     needed = {m.src for m in spec.measures if _needs_src(m)}
     needed.update(spec.key_cols)
     needed.add(spec.tiebreak_col)
-    cols = [F.col(c) for c in sorted(needed)]
-    cols.append(
-        F.unix_micros(F.col(spec.order_col).cast(T.TimestampType())).alias(_TS_COL)
+    return _with_nav_cols(df, spec).selectExpr(
+        *[ident(c) for c in sorted(needed)],
+        f"{_ts_sql(spec)} AS {_TS_COL}",
+        *_pred_cols(spec),
     )
-    for i, e in enumerate(spec.pred_exprs):
-        cols.append(F.expr(e).alias(f"{_PRED_PREFIX}{i}"))
-    return df.select(*cols)
+
+
+def _prepare_all_rows(df: DataFrame, spec) -> DataFrame:
+    """:func:`_prepare` for ALL ROWS PER MATCH: every input column is
+    kept, because each matched row is emitted whole."""
+    return _with_nav_cols(df, spec).selectExpr(
+        *[ident(c) for c in df.columns],
+        f"{_ts_sql(spec)} AS {_TS_COL}",
+        *_pred_cols(spec),
+    )
 
 
 def match_pattern(df: DataFrame, spec: PatternSpec) -> DataFrame:
@@ -592,16 +611,7 @@ def match_pattern_alternation_all_rows(
         pos += len(alt.pred_exprs)
     n_total = pos
 
-    prepared = _with_nav_cols(df, aspec).select(
-        *data_cols,
-        F.unix_micros(
-            F.col(aspec.order_col).cast(T.TimestampType())
-        ).alias(_TS_COL),
-        *[
-            F.expr(e).alias(f"{_PRED_PREFIX}{i}")
-            for i, e in enumerate(aspec.pred_exprs)
-        ],
-    )
+    prepared = _prepare_all_rows(df, aspec)
     out_schema = all_rows_output_schema(df, aspec)
     out_cols_names = [f.name for f in out_schema.fields]
     nfas = [nfa.Nfa(alt) for alt in alts]
@@ -713,14 +723,7 @@ def match_pattern_all_rows(df: DataFrame, spec: PatternSpec) -> DataFrame:
             "ALL ROWS PER MATCH requires strict contiguity"
         )
     data_cols = list(df.columns)
-    prepared = _with_nav_cols(df, spec).select(
-        *data_cols,
-        F.unix_micros(F.col(spec.order_col).cast(T.TimestampType())).alias(_TS_COL),
-        *[
-            F.expr(e).alias(f"{_PRED_PREFIX}{i}")
-            for i, e in enumerate(spec.pred_exprs)
-        ],
-    )
+    prepared = _prepare_all_rows(df, spec)
     out_schema = all_rows_output_schema(df, spec)
     n_vars = len(spec.pred_exprs)
     compiled = nfa.Nfa(spec)

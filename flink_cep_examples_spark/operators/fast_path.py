@@ -35,17 +35,30 @@ Three shapes compile here:
   match row set is a segment filter, classifier is positional);
 - :func:`match_pattern_fast_absence` — ``A notFollowedBy(N) within T``
   timed absence (match ⇔ no N row before the deadline).
+
+Construction rule: the closed forms are built from SQL text, not from
+``pyspark.sql.functions`` Column trees. Each window level is ONE
+``selectExpr`` (or one ``where``) of expression strings over a shared
+window-spec string (``PARTITION BY <keys> ORDER BY __ts, __tb``);
+columns that do not depend on each other share a level, and the cast to
+the tier's output schema is folded into the last projection
+(:func:`_final_projection`). Every name and value goes through
+:mod:`flink_cep_examples_spark.sqltext` (``ident`` / ``lit`` /
+``type_sql``). On the driver a Column call costs several py4j
+round-trips and every ``withColumn`` is one more Dataset to analyze;
+the SQL text costs one command per expression string and one analysis
+per level, so the plans are unchanged while their construction is
+several times cheaper (SCALING.md, "Driver plan construction").
 """
 
 from __future__ import annotations
 
 import weakref
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from flink_cep_examples_spark.operators.cep_batch import output_schema
+from flink_cep_examples_spark.operators.cep_batch import _ts_sql, output_schema
 from flink_cep_examples_spark.plans.pattern import (
     AGG_FNS,
     NILADIC_FNS,
@@ -64,6 +77,47 @@ from flink_cep_examples_spark.plans.pattern import (
     PatternSpec,
 )
 from flink_cep_examples_spark.schemas import MATCH_TAG, TIMEOUT_TAG
+from flink_cep_examples_spark.sqltext import cast_as, ident, idents, lit
+
+#: frame of a "next matching row" lookup over the ordering window
+_FOLLOWING = "ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING"
+
+#: measure aggregate → SQL aggregate function
+_AGG_SQL = {
+    "sum": "sum",
+    "min": "min",
+    "max": "max",
+    "avg": "avg",
+    "count_col": "count",
+}
+
+
+def _within_us(spec) -> int | None:
+    if spec.within is None:
+        return None
+    return int(spec.within.total_seconds() * 1_000_000)
+
+
+def _ts_tb(spec) -> list[str]:
+    """The ``__ts`` (epoch µs) and ``__tb`` (tiebreak) input columns."""
+    return [f"{_ts_sql(spec)} AS __ts", f"{ident(spec.tiebreak_col)} AS __tb"]
+
+
+def _order_window(keys) -> str:
+    """The per-key (order, tiebreak) window every closed form shares."""
+    return f"PARTITION BY {idents(keys)} ORDER BY __ts, __tb"
+
+
+def _segment_window(keys) -> str:
+    return f"PARTITION BY {idents(keys)}, __seg"
+
+
+def _final_projection(df: DataFrame, schema: T.StructType, exprs) -> DataFrame:
+    """The last projection of a closed form: one SQL expression per
+    output field, cast to the tier's output schema."""
+    return df.selectExpr(
+        *[cast_as(e, f) for e, f in zip(exprs, schema.fields, strict=True)]
+    )
 
 
 def fast_abc_applicable(spec: PatternSpec) -> bool:
@@ -158,10 +212,10 @@ def fast_abc_semantics_hold(df: DataFrame, spec: PatternSpec) -> bool:
         if per_sess is not None and key in per_sess:
             return per_sess[key]
     pa, pb, pc = (
-        F.coalesce(F.expr(p).cast("boolean"), F.lit(False))
+        f"coalesce(CAST(({p}) AS BOOLEAN), false)"
         for p in (a_pred, b_pred, c_pred)
     )
-    ok = df.where((pb == pc) | (pa & pc)).isEmpty()
+    ok = df.where(f"{pb} = {pc} OR ({pa} AND {pc})").isEmpty()
     if key is not None:
         try:
             per_sess = _ABC_SEMANTICS_MEMO.setdefault(sess, {})
@@ -226,36 +280,31 @@ def match_pattern_fast_absence(df: DataFrame, spec: PatternSpec) -> DataFrame:
     spec.validate()
     a_v, n_v = spec.variables
     keys = list(spec.key_cols)
-    within_us = int(spec.within.total_seconds() * 1_000_000)
 
     srcs = sorted({m.src for m in spec.measures} - set(keys))
-    base = df.select(
-        *keys,
-        F.unix_micros(F.col(spec.order_col).cast(T.TimestampType())).alias("__ts"),
-        F.col(spec.tiebreak_col).alias("__tb"),
-        F.expr(a_v.predicate).alias("__is_a"),
-        F.expr(n_v.predicate).alias("__is_n"),
-        *srcs,
+    base = df.selectExpr(
+        *[ident(k) for k in keys],
+        *_ts_tb(spec),
+        f"({a_v.predicate}) AS __is_a",
+        f"({n_v.predicate}) AS __is_n",
+        *[ident(s) for s in srcs],
     )
-    w_ord = Window.partitionBy(*keys).orderBy("__ts", "__tb")
-    next_n = F.min(F.when(F.col("__is_n"), F.col("__ts"))).over(
-        w_ord.rowsBetween(1, Window.unboundedFollowing)
+    next_n = (
+        f"min(CASE WHEN __is_n THEN __ts END) OVER "
+        f"({_order_window(keys)} {_FOLLOWING})"
     )
-    clean = F.col("__next_n").isNull() | (
-        (F.col("__next_n") - F.col("__ts")) >= F.lit(within_us)
+    out = base.selectExpr("*", f"{next_n} AS __next_n").where(
+        "__is_a AND (__next_n IS NULL OR "
+        f"__next_n - __ts >= {_within_us(spec)})"
     )
-    out = (
-        base.withColumn("__next_n", next_n)
-        .filter(F.col("__is_a") & clean)
-        .select(
-            *keys,
-            *[F.col(m.src).alias(m.name) for m in spec.measures],
-            F.lit(MATCH_TAG).alias("tag"),
-        )
-    )
-    target = output_schema(df, spec)
-    return out.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target.fields]
+    return _final_projection(
+        out,
+        output_schema(df, spec),
+        [
+            *[ident(k) for k in keys],
+            *[ident(m.src) for m in spec.measures],
+            lit(MATCH_TAG),
+        ],
     )
 
 
@@ -264,7 +313,9 @@ def _segment_anchors(
     spec: PatternSpec,
     carry_cols: list[str],
     include_c_payload: bool = False,
-) -> tuple[DataFrame, Window]:
+    ord_cols: tuple[str, ...] = (),
+    anchor_cols: tuple[str, ...] = (),
+) -> DataFrame:
     """Shared closed-form segmentation for the A B* C shapes — ONE
     definition so the one-row and all-rows paths cannot drift:
 
@@ -288,16 +339,14 @@ def _segment_anchors(
       first stop row after the anchor, when the loop variable carries
       an until() condition.
 
-    Returns (annotated frame, the per-key ordering window) — all
-    columns computed over one hash Exchange on the key."""
+    ``ord_cols`` are the caller's further columns over the per-key
+    ordering window (``__seg``'s level), ``anchor_cols`` its further
+    columns that read ``__a`` (``__u_rn``'s level). All columns are
+    computed over one hash Exchange on the key."""
     a_var, _, c_var = (v.name for v in spec.variables)
     a_pred, _, c_pred = (v.predicate for v in spec.variables)
     keys = list(spec.key_cols)
-    within_us = (
-        int(spec.within.total_seconds() * 1_000_000)
-        if spec.within is not None
-        else None
-    )
+    within_us = _within_us(spec)
     until_pred = spec.variables[1].until
     a_srcs = sorted(
         {m.src for m in spec.measures if m.var == a_var and m.fn != "count"}
@@ -305,50 +354,42 @@ def _segment_anchors(
     c_srcs = sorted(
         {m.src for m in spec.measures if m.var == c_var and m.fn != "count"}
     )
+    w_ord = _order_window(keys)
+    w_seg = _segment_window(keys)
 
-    base = df.select(
-        *carry_cols,
-        F.unix_micros(F.col(spec.order_col).cast(T.TimestampType())).alias("__ts"),
-        F.col(spec.tiebreak_col).alias("__tb"),
-        F.expr(a_pred).alias("__is_a"),
-        F.expr(c_pred).alias("__is_c"),
-        *([F.expr(until_pred).alias("__is_u")] if until_pred else []),
+    base = df.selectExpr(
+        *[ident(c) for c in carry_cols],
+        *_ts_tb(spec),
+        f"({a_pred}) AS __is_a",
+        f"({c_pred}) AS __is_c",
+        *([f"({until_pred}) AS __is_u"] if until_pred else []),
     )
-    w_ord = Window.partitionBy(*keys).orderBy("__ts", "__tb")
-    base = base.withColumn(
-        "__seg",
-        F.coalesce(
-            F.sum(F.col("__is_c").cast("long")).over(
-                w_ord.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ),
-    ).withColumn("__rn", F.row_number().over(w_ord))
-
-    w_seg = Window.partitionBy(*keys, "__seg")
-    c_fields = [F.col("__ts").alias("ts"), F.col("__rn").alias("rn")]
+    out = base.selectExpr(
+        "*",
+        "coalesce(sum(CAST(__is_c AS BIGINT)) OVER ("
+        f"{w_ord} ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)"
+        " AS __seg",
+        f"row_number() OVER ({w_ord}) AS __rn",
+        *ord_cols,
+    )
+    c_fields = ["'ts', __ts", "'rn', __rn"]
     if include_c_payload:
-        c_fields += [F.col(s).alias(f"s_{s}") for s in c_srcs]
-    out = base.withColumn(
-        "__c",
-        F.max(F.when(F.col("__is_c"), F.struct(*c_fields))).over(w_seg),
+        c_fields += [f"{lit('s_' + s)}, {ident(s)}" for s in c_srcs]
+    out = out.selectExpr(
+        "*",
+        f"max(CASE WHEN __is_c THEN named_struct({', '.join(c_fields)}) END)"
+        f" OVER ({w_seg}) AS __c",
     )
     deadline_ok = (
-        F.col("__c").isNotNull()
+        "__c IS NOT NULL"
         if within_us is None
-        else (F.col("__c.ts") - F.col("__ts")) < F.lit(within_us)
+        else f"__c.ts - __ts < {within_us}"
     )
-    out = out.withColumn(
-        "__a",
-        F.min(
-            F.when(
-                F.col("__is_a") & deadline_ok,
-                F.struct(
-                    F.col("__rn").alias("rn"),
-                    *[F.col(s).alias(f"s_{s}") for s in a_srcs],
-                ),
-            )
-        ).over(w_seg),
+    a_fields = ["'rn', __rn"] + [f"{lit('s_' + s)}, {ident(s)}" for s in a_srcs]
+    out = out.selectExpr(
+        "*",
+        f"min(CASE WHEN __is_a AND {deadline_ok} THEN "
+        f"named_struct({', '.join(a_fields)}) END) OVER ({w_seg}) AS __a",
     )
     if until_pred:
         # Flink until(): the first stop row after the match's A closes
@@ -356,16 +397,14 @@ def _segment_anchors(
         # consumed, truncating the count; the match itself survives
         # (relaxed contiguity carries the run to its C). Same window
         # partitioning → no extra Exchange.
-        out = out.withColumn(
-            "__u_rn",
-            F.min(
-                F.when(
-                    F.col("__is_u") & (F.col("__rn") > F.col("__a.rn")),
-                    F.col("__rn"),
-                )
-            ).over(w_seg),
+        anchor_cols = (
+            "min(CASE WHEN __is_u AND __rn > __a.rn THEN __rn END) "
+            f"OVER ({w_seg}) AS __u_rn",
+            *anchor_cols,
         )
-    return out, w_ord
+    if anchor_cols:
+        out = out.selectExpr("*", *anchor_cols)
+    return out
 
 
 def match_pattern_fast_abc_all_rows(df: DataFrame, spec: PatternSpec) -> DataFrame:
@@ -406,117 +445,106 @@ def match_pattern_fast_abc_all_rows(df: DataFrame, spec: PatternSpec) -> DataFra
     keys = list(spec.key_cols)
     data_cols = list(df.columns)
 
-    with_a, _ = _segment_anchors(df, spec, data_cols, include_c_payload=True)
+    with_a = _segment_anchors(df, spec, data_cols, include_c_payload=True)
     # the anchor implies a closing C (its deadline references __c), but
     # assert the invariant structurally: a match needs BOTH ends.
-    kept = with_a.filter(
-        F.col("__a").isNotNull()
-        & F.col("__c").isNotNull()
-        & (F.col("__rn") >= F.col("__a.rn"))
+    kept = with_a.where(
+        "__a IS NOT NULL AND __c IS NOT NULL AND __rn >= __a.rn"
     )
     # per-key 0-based match index in emission (= segment) order; same
-    # partitioning as w_ord → no additional Exchange.
+    # partitioning as the ordering window → no additional Exchange.
     match_seq = (
-        F.dense_rank().over(Window.partitionBy(*keys).orderBy("__seg")) - 1
-    ).cast("long")
+        f"CAST(dense_rank() OVER (PARTITION BY {idents(keys)} "
+        "ORDER BY __seg) - 1 AS BIGINT)"
+    )
     classifier = (
-        F.when(F.col("__rn") == F.col("__a.rn"), F.lit(a_var))
-        .when(F.col("__is_c"), F.lit(c_var))
-        .otherwise(F.lit(b_var))
+        f"CASE WHEN __rn = __a.rn THEN {lit(a_var)} "
+        f"WHEN __is_c THEN {lit(c_var)} ELSE {lit(b_var)} END"
     )
 
-    w_seg_full = Window.partitionBy(*keys, "__seg")
+    w_seg = _segment_window(keys)
     w_run = (
-        Window.partitionBy(*keys, "__seg")
-        .orderBy("__rn")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        f"{w_seg} ORDER BY __rn "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
     )
-    in_b = (F.col("__rn") > F.col("__a.rn")) & (
-        F.col("__rn") < F.col("__c.rn")
+    # full-frame window must be ORDERED for deterministic first/last;
+    # aggregates are order-insensitive
+    w_all = (
+        f"{w_seg} ORDER BY __rn "
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
     )
-    _AGG = {
-        "sum": F.sum,
-        "min": F.min,
-        "max": F.max,
-        "avg": F.avg,
-        "count_col": F.count,
-    }
+    in_b = "__rn > __a.rn AND __rn < __c.rn"
 
-    def _single_row_agg(m: Measure, value):
+    def _single_row_agg(m: Measure, value: str) -> str:
         """Aggregate over a one-row span (the A or C row)."""
         if m.fn == "count_col":
-            return value.isNotNull().cast("long")
+            return f"CAST({value} IS NOT NULL AS BIGINT)"
         if m.fn == "avg":
-            return value.cast("double")
+            return f"CAST({value} AS DOUBLE)"
         return value  # sum/min/max/first/last of one value
 
-    def measure(m: Measure):
+    def measure(m: Measure) -> str:
         if m.fn == "match_number":
             # RUNNING == FINAL (constant per match); 1-based per key
-            return match_seq + F.lit(1)
+            return f"{match_seq} + 1"
         if m.fn == "classifier":
             # RUNNING = current row's variable; FINAL = the match's
             # last row's variable, which is always the closing C
-            return classifier if m.running else F.lit(c_var)
+            return classifier if m.running else lit(c_var)
         if m.var == b_var:
             if m.fn == "count":
                 if m.running:
                     # B rows seen so far: interior rows up to this one
-                    return F.greatest(
-                        F.lit(0),
-                        F.least(F.col("__rn"), F.col("__c.rn") - 1)
-                        - F.col("__a.rn"),
-                    ).cast("long")
-                return (F.col("__c.rn") - F.col("__a.rn") - 1).cast("long")
-            if m.fn in ("first", "last"):
-                # full-frame window must be ORDERED for deterministic
-                # first/last; aggregates are order-insensitive
-                win = (
-                    w_run
-                    if m.running
-                    else Window.partitionBy(*keys, "__seg")
-                    .orderBy("__rn")
-                    .rowsBetween(
-                        Window.unboundedPreceding, Window.unboundedFollowing
+                    return (
+                        "CAST(greatest(0, least(__rn, __c.rn - 1) - __a.rn)"
+                        " AS BIGINT)"
                     )
+                return "CAST(__c.rn - __a.rn - 1 AS BIGINT)"
+            if m.fn in ("first", "last"):
+                wrapped = (
+                    f"CASE WHEN {in_b} THEN "
+                    f"named_struct('v', {ident(m.src)}) END"
                 )
-                fn = F.first if m.fn == "first" else F.last
-                wrapped = F.when(in_b, F.struct(F.col(m.src).alias("v")))
-                return fn(wrapped, ignorenulls=True).over(win)["v"]
-            win = w_run if m.running else w_seg_full
-            return _AGG[m.fn](F.when(in_b, F.col(m.src))).over(win)
+                win = w_run if m.running else w_all
+                return f"({m.fn}({wrapped}, true) OVER ({win})).v"
+            win = w_run if m.running else w_seg
+            return (
+                f"{_AGG_SQL[m.fn]}(CASE WHEN {in_b} THEN {ident(m.src)} END)"
+                f" OVER ({win})"
+            )
         if m.var == a_var:
             # the anchor is the match's FIRST row → RUNNING == FINAL
             if m.fn == "count":
-                return F.lit(1).cast("long")
-            return _single_row_agg(m, F.col(f"__a.s_{m.src}"))
+                return "CAST(1 AS BIGINT)"
+            return _single_row_agg(m, f"__a.{ident('s_' + m.src)}")
         # C variable: one row at the segment's end; RUNNING measures
         # see it only from that row on (i.e. only the C row itself)
         if m.fn == "count":
-            if m.running:
-                return F.col("__is_c").cast("long")
-            return F.lit(1).cast("long")
-        value = F.col(f"__c.s_{m.src}")
+            return "CAST(__is_c AS BIGINT)" if m.running else "CAST(1 AS BIGINT)"
+        value = f"__c.{ident('s_' + m.src)}"
         if m.running:
-            value = F.when(F.col("__is_c"), value)
+            value = f"CASE WHEN __is_c THEN {value} END"
         return _single_row_agg(m, value)
 
-    out = kept.select(
-        *data_cols,
-        classifier.alias("classifier"),
-        match_seq.alias("match_seq"),
-        *[measure(m).alias(m.name) for m in spec.measures],
+    out = _final_projection(
+        kept,
+        all_rows_output_schema(df, spec),
+        [
+            *[ident(c) for c in data_cols],
+            classifier,
+            match_seq,
+            *[measure(m) for m in spec.measures],
+        ],
     )
     # SQL:2016 {- var -}: excluded variables' rows drop from the output
     # only — the match itself (anchors, measures, match_seq) is computed
     # above on the full segment, so this is a plain post-filter
     excluded = [v.name for v in spec.variables if v.excluded]
     if excluded:
-        out = out.filter(~F.col("classifier").isin(excluded))
-    target = all_rows_output_schema(df, spec)
-    return out.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target.fields]
-    )
+        out = out.where(
+            f"NOT (`classifier` IN ({', '.join(lit(v) for v in excluded)}))"
+        )
+    return out
 
 
 def match_pattern_fast_abc(df: DataFrame, spec: PatternSpec) -> DataFrame:
@@ -527,12 +555,9 @@ def match_pattern_fast_abc(df: DataFrame, spec: PatternSpec) -> DataFrame:
     spec.validate()
     a_var, b_var, c_var = (v.name for v in spec.variables)
     keys = list(spec.key_cols)
-    within_us = (
-        int(spec.within.total_seconds() * 1_000_000)
-        if spec.within is not None
-        else None
-    )
+    within_us = _within_us(spec)
     until_pred = spec.variables[1].until
+    w_ord = _order_window(keys)
 
     srcs = sorted(
         {
@@ -542,32 +567,7 @@ def match_pattern_fast_abc(df: DataFrame, spec: PatternSpec) -> DataFrame:
         }
         - set(keys)
     )
-    with_a, w_ord = _segment_anchors(df, spec, [*keys, *srcs])
-    agg_measures = [m for m in spec.measures if m.fn in AGG_FNS]
-    if agg_measures:
-        # B rows of a match are the segment slice strictly between the
-        # anchor A and the closing C — a windowed conditional aggregate
-        # over the SAME (key, __seg) partition (no new exchange).
-        # Empty slice → NULL (COUNT → 0), matching the NFA evaluator.
-        w_seg = Window.partitionBy(*keys, "__seg")
-        in_b = (F.col("__rn") > F.col("__a.rn")) & (
-            F.col("__rn") < F.col("__c.rn")
-        )
-        _AGG = {
-            "sum": F.sum,
-            "min": F.min,
-            "max": F.max,
-            "avg": F.avg,
-            "count_col": F.count,
-        }
-        with_a = with_a.withColumns(
-            {
-                f"__bagg_{m.name}": _AGG[m.fn](
-                    F.when(in_b, F.col(m.src))
-                ).over(w_seg)
-                for m in agg_measures
-            }
-        )
+    ord_cols = []
     if spec.emit_timeouts:
         # Same window partitioning/ordering as __seg/__rn → one Window
         # stage, no extra shuffle. Because A ∧ C is unsatisfiable, a row
@@ -575,48 +575,60 @@ def match_pattern_fast_abc(df: DataFrame, spec: PatternSpec) -> DataFrame:
         # never both — so matches and timeouts are emitted from ONE
         # filtered frame with CASE WHEN projections (single scan, single
         # exchange; no union of two subplans).
-        with_a = with_a.withColumn(
-            "__next_c",
-            F.min(F.when(F.col("__is_c"), F.col("__ts"))).over(
-                w_ord.rowsBetween(1, Window.unboundedFollowing)
-            ),
+        ord_cols.append(
+            f"min(CASE WHEN __is_c THEN __ts END) OVER ({w_ord} "
+            f"{_FOLLOWING}) AS __next_c"
         )
+    # B rows of a match are the segment slice strictly between the
+    # anchor A and the closing C — a windowed conditional aggregate
+    # over the SAME (key, __seg) partition (no new exchange).
+    # Empty slice → NULL (COUNT → 0), matching the NFA evaluator.
+    anchor_cols = [
+        f"{_AGG_SQL[m.fn]}(CASE WHEN __rn > __a.rn AND __rn < __c.rn "
+        f"THEN {ident(m.src)} END) OVER ({_segment_window(keys)}) "
+        f"AS {ident('__bagg_' + m.name)}"
+        for m in spec.measures
+        if m.fn in AGG_FNS
+    ]
+    with_a = _segment_anchors(
+        df,
+        spec,
+        [*keys, *srcs],
+        ord_cols=tuple(ord_cols),
+        anchor_cols=tuple(anchor_cols),
+    )
 
-    is_match_row = F.col("__is_c") & F.col("__a").isNotNull()
+    is_match_row = "(__is_c AND __a IS NOT NULL)"
     if spec.emit_timeouts:
-        nc = F.col("__next_c")
         timed_out_cond = (
-            nc.isNull()
+            "__next_c IS NULL"
             if within_us is None
-            else nc.isNull() | ((nc - F.col("__ts")) >= F.lit(within_us))
+            else f"(__next_c IS NULL OR __next_c - __ts >= {within_us})"
         )
-        is_timeout_row = F.col("__is_a") & timed_out_cond
-        keep = is_match_row | is_timeout_row
+        keep = f"{is_match_row} OR (__is_a AND {timed_out_cond})"
     else:
         keep = is_match_row
 
-    def match_measure(m: Measure):
+    def match_measure(m: Measure) -> str:
         if m.fn in AGG_FNS:
-            return F.col(f"__bagg_{m.name}")
+            return ident(f"__bagg_{m.name}")
         if m.fn == "classifier":
-            return F.lit(c_var)  # a match's last row is always its C
+            return lit(c_var)  # a match's last row is always its C
         if m.fn == "match_number":
             # per-key emission ordinal: matches emit at their C rows in
             # event-time order; same key partitioning → no new exchange
-            return F.row_number().over(w_ord)
+            return f"row_number() OVER ({w_ord})"
         if m.var == c_var:
-            return F.col(m.src)
+            return ident(m.src)
         if m.var == a_var:
-            return F.col(f"__a.s_{m.src}")
+            return f"__a.{ident('s_' + m.src)}"
         # B count = rows strictly between the A row and the C row,
         # truncated at the first until() stop row when one exists
         # (evaluated on the C row, where __rn is the C position)
-        end = F.col("__rn")
-        if until_pred:
-            end = F.least(end, F.coalesce(F.col("__u_rn"), end))
-        return (end - F.col("__a.rn") - 1).cast("long")
+        end = "least(__rn, coalesce(__u_rn, __rn))" if until_pred else "__rn"
+        return f"CAST({end} - __a.rn - 1 AS BIGINT)"
 
-    def timeout_measure(m: Measure):
+    def timeout_measure(m: Measure) -> str:
         # NOTE (documented deviation): 'count' measures on timeout rows
         # are 0 here, whereas the NFA reports rows actually consumed
         # before pruning. The reference's timeout output projects
@@ -624,33 +636,31 @@ def match_pattern_fast_abc(df: DataFrame, spec: PatternSpec) -> DataFrame:
         # so parity is unaffected; use the general operator if partial
         # B-counts matter.
         if m.var == a_var and m.fn in ("first", "last"):
-            return F.col(m.src)
+            return ident(m.src)
         if m.fn == "count":
-            return F.lit(0).cast("long")
-        return F.lit(m.default)
+            return "CAST(0 AS BIGINT)"
+        return lit(m.default)
 
-    def measure(m: Measure):
+    def measure(m: Measure) -> str:
         if not spec.emit_timeouts:
-            return match_measure(m).alias(m.name)
+            return match_measure(m)
         return (
-            F.when(is_match_row, match_measure(m))
-            .otherwise(timeout_measure(m))
-            .alias(m.name)
+            f"CASE WHEN {is_match_row} THEN {match_measure(m)} "
+            f"ELSE {timeout_measure(m)} END"
         )
 
     tag = (
-        F.when(is_match_row, F.lit(MATCH_TAG)).otherwise(F.lit(TIMEOUT_TAG))
+        f"CASE WHEN {is_match_row} THEN {lit(MATCH_TAG)} "
+        f"ELSE {lit(TIMEOUT_TAG)} END"
         if spec.emit_timeouts
-        else F.lit(MATCH_TAG)
+        else lit(MATCH_TAG)
     )
-    out = with_a.filter(keep).select(
-        *keys, *[measure(m) for m in spec.measures], tag.alias("tag")
-    )
-
-    # align column types with the general operator's output schema
-    target = output_schema(df, spec)
-    return out.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target.fields]
+    # the final projection also aligns column types with the general
+    # operator's output schema
+    return _final_projection(
+        with_a.where(keep),
+        output_schema(df, spec),
+        [*[ident(k) for k in keys], *[measure(m) for m in spec.measures], tag],
     )
 
 
@@ -758,40 +768,39 @@ def match_pattern_fast_positional(df: DataFrame, spec: PatternSpec) -> DataFrame
     srcs = sorted(
         {m.src for m in spec.measures if m.fn != "count"} - set(keys)
     )
-    base = df.select(
-        *keys,
-        F.unix_micros(F.col(spec.order_col).cast(T.TimestampType())).alias("__ts"),
-        F.col(spec.tiebreak_col).alias("__tb"),
-        *srcs,
+    base = df.selectExpr(
+        *[ident(c) for c in keys], *_ts_tb(spec), *[ident(s) for s in srcs]
     )
-    w_ord = Window.partitionBy(*keys).orderBy("__ts", "__tb")
+    w_ord = _order_window(keys)
 
-    def measure(m: Measure):
+    def measure(m: Measure) -> str:
         if m.fn == "count":
-            return F.lit(widths[m.var]).cast("long")
+            return f"CAST({widths[m.var]} AS BIGINT)"
         off = starts[m.var]
         if m.fn == "last":
             off += widths[m.var] - 1
-        return F.col(m.src) if off == 0 else F.lead(m.src, off).over(w_ord)
+        src = ident(m.src)
+        return src if off == 0 else f"lead({src}, {off}) OVER ({w_ord})"
 
-    r0 = F.row_number().over(w_ord) - 1
     # the match fits iff the last row exists: lead of the (non-null)
     # tiebreak at offset L-1 — avoids a second count() window frame
-    fits = F.lead("__tb", total - 1).over(w_ord).isNotNull()
-    out = (
-        base.withColumn("__r0", r0)
-        .withColumn("__fits", fits)
-        .withColumns({f"__m_{m.name}": measure(m) for m in spec.measures})
-        .filter((F.col("__r0") % F.lit(delta) == 0) & F.col("__fits"))
-        .select(
-            *keys,
-            *[F.col(f"__m_{m.name}").alias(m.name) for m in spec.measures],
-            F.lit(MATCH_TAG).alias("tag"),
-        )
-    )
-    target = output_schema(df, spec)
-    return out.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target.fields]
+    out = base.selectExpr(
+        "*",
+        f"row_number() OVER ({w_ord}) - 1 AS __r0",
+        f"lead(__tb, {total - 1}) OVER ({w_ord}) IS NOT NULL AS __fits",
+        *[
+            f"{measure(m)} AS {ident('__m_' + m.name)}"
+            for m in spec.measures
+        ],
+    ).where(f"__r0 % {delta} = 0 AND __fits")
+    return _final_projection(
+        out,
+        output_schema(df, spec),
+        [
+            *[ident(c) for c in keys],
+            *[ident("__m_" + m.name) for m in spec.measures],
+            lit(MATCH_TAG),
+        ],
     )
 
 
@@ -842,75 +851,61 @@ def match_pattern_permute(df: DataFrame, spec: PatternSpec) -> DataFrame:
     spec.validate()
     k = len(spec.variables)
     keys = list(spec.key_cols)
-    within_us = (
-        int(spec.within.total_seconds() * 1_000_000)
-        if spec.within is not None
-        else None
-    )
+    within_us = _within_us(spec)
     srcs = sorted(
         {m.src for m in spec.measures if m.fn != "count"} - set(keys)
     )
-    base = df.select(
-        *keys,
-        F.unix_micros(F.col(spec.order_col).cast(T.TimestampType())).alias("__ts"),
-        F.col(spec.tiebreak_col).alias("__tb"),
-        *[
-            F.expr(v.predicate).alias(f"__p{j}")
-            for j, v in enumerate(spec.variables)
-        ],
-        *srcs,
+    base = df.selectExpr(
+        *[ident(c) for c in keys],
+        *_ts_tb(spec),
+        *[f"({v.predicate}) AS __p{j}" for j, v in enumerate(spec.variables)],
+        *[ident(s) for s in srcs],
     )
-    w_ord = Window.partitionBy(*keys).orderBy("__ts", "__tb")
+    w_ord = _order_window(keys)
 
-    def at(col: str, off: int):
-        return F.col(col) if off == 0 else F.lead(col, off).over(w_ord)
+    def at(col: str, off: int) -> str:
+        return col if off == 0 else f"lead({col}, {off}) OVER ({w_ord})"
 
-    # k × k grid: variable j's predicate evaluated at row offset i
-    grid = {
-        (j, i): at(f"__p{j}", i) for j in range(k) for i in range(k)
-    }
     orderings = list(permutations(range(k)))  # lexicographic by construction
 
-    def seq_cond(seq):
-        cond = F.lit(True)
-        for i, j in enumerate(seq):
-            cond = cond & F.coalesce(grid[(j, i)], F.lit(False))
-        return cond
-
-    fits = at("__tb", k - 1).isNotNull()
-    span_ok = (
-        F.lit(True)
-        if within_us is None
-        else (at("__ts", k - 1) - F.col("__ts")) < F.lit(within_us)
-    )
-    conds = [seq_cond(seq) for seq in orderings]
-    any_match = conds[0]
-    for c in conds[1:]:
-        any_match = any_match | c
-
-    def measure(m: Measure):
-        if m.fn == "count":
-            return F.lit(1).cast("long")
-        j = spec.var_index(m.var)
-        expr = F.lit(None)
-        # first matching ordering in preference order binds the vars
-        for seq, cond in zip(reversed(orderings), reversed(conds)):
-            expr = F.when(cond, at(m.src, seq.index(j))).otherwise(expr)
-        return expr
-
-    out = (
-        base.withColumn("__keep", fits & span_ok & any_match)
-        .withColumns({f"__m_{m.name}": measure(m) for m in spec.measures})
-        .filter(F.col("__keep"))
-        .select(
-            *keys,
-            *[F.col(f"__m_{m.name}").alias(m.name) for m in spec.measures],
-            F.lit(MATCH_TAG).alias("tag"),
+    def seq_cond(seq) -> str:
+        # variable j's predicate evaluated at row offset i
+        return " AND ".join(
+            f"coalesce({at(f'__p{j}', i)}, false)" for i, j in enumerate(seq)
         )
-    )
-    target = output_schema(df, spec)
-    return out.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in target.fields]
+
+    conds = [f"({seq_cond(seq)})" for seq in orderings]
+    keep = [f"{at('__tb', k - 1)} IS NOT NULL", f"({' OR '.join(conds)})"]
+    if within_us is not None:
+        keep.append(f"{at('__ts', k - 1)} - __ts < {within_us}")
+
+    def measure(m: Measure) -> str:
+        if m.fn == "count":
+            return "CAST(1 AS BIGINT)"
+        j = spec.var_index(m.var)
+        # first matching ordering in preference order binds the vars
+        whens = " ".join(
+            f"WHEN {cond} THEN {at(ident(m.src), seq.index(j))}"
+            for seq, cond in zip(orderings, conds)
+        )
+        return f"CASE {whens} END"
+
+    out = base.selectExpr(
+        "*",
+        f"{' AND '.join(keep)} AS __keep",
+        *[
+            f"{measure(m)} AS {ident('__m_' + m.name)}"
+            for m in spec.measures
+        ],
+    ).where("__keep")
+    return _final_projection(
+        out,
+        output_schema(df, spec),
+        [
+            *[ident(c) for c in keys],
+            *[ident("__m_" + m.name) for m in spec.measures],
+            lit(MATCH_TAG),
+        ],
     )
 
 
@@ -995,11 +990,7 @@ def match_pattern_alternation_fast(
     aspec.validate()
     alts = aspec.alternatives
     keys = list(aspec.key_cols)
-    within_us = (
-        int(alts[0].within.total_seconds() * 1_000_000)
-        if alts[0].within is not None
-        else None
-    )
+    within_us = _within_us(alts[0])
 
     # evaluate each distinct predicate once, vectorized pre-window
     pred_col: dict[str, str] = {}
@@ -1010,42 +1001,36 @@ def match_pattern_alternation_fast(
         {m.src for m in aspec.measures if m.fn in ("first", "last")}
         - set(keys)
     )
-    base = df.select(
-        *keys,
-        F.unix_micros(
-            F.col(aspec.order_col).cast(T.TimestampType())
-        ).alias("__ts"),
-        F.col(aspec.tiebreak_col).alias("__tb"),
-        *srcs,
-        *[F.expr(e).alias(n) for e, n in pred_col.items()],
+    base = df.selectExpr(
+        *[ident(c) for c in keys],
+        *_ts_tb(aspec),
+        *[ident(s) for s in srcs],
+        *[f"({e}) AS {n}" for e, n in pred_col.items()],
     )
-    w = Window.partitionBy(*keys).orderBy("__ts", "__tb")
+    w = _order_window(keys)
 
-    def at(col: str, off: int):
-        return F.col(col) if off == 0 else F.lead(col, off).over(w)
+    def at(col: str, off: int) -> str:
+        return col if off == 0 else f"lead({col}, {off}) OVER ({w})"
 
     # per-branch geometry + candidate boolean
     lengths: list[int] = []
     offsets: list[dict[str, tuple[int, int]]] = []  # var -> (start, width)
-    cands = []
+    cands: list[str] = []
     for alt in alts:
         counts = _fixed_counts(alt)
         L = sum(counts)
         lengths.append(L)
         offs = {}
-        cand = F.lit(True)
+        conj = []
         pos = 0
         for v, c in zip(alt.variables, counts):
             offs[v.name] = (pos, c)
-            for o in range(pos, pos + c):
-                cand = cand & at(pred_col[v.predicate], o)
+            conj += [at(pred_col[v.predicate], o) for o in range(pos, pos + c)]
             pos += c
         if within_us is not None and L > 1:
-            cand = cand & (
-                at("__ts", L - 1) - F.col("__ts") < F.lit(within_us)
-            )
+            conj.append(f"{at('__ts', L - 1)} - __ts < {within_us}")
         offsets.append(offs)
-        cands.append(F.coalesce(cand, F.lit(False)))
+        cands.append(f"coalesce({' AND '.join(conj)}, false)")
 
     # preference among satisfied branches at one start row:
     # eager — smallest completion row, then leftmost alternative;
@@ -1058,9 +1043,14 @@ def match_pattern_alternation_fast(
         pref = list(range(len(alts)))
     else:
         pref = sorted(range(len(alts)), key=lambda b: (lengths[b], b))
-    winner = F.lit(None).cast("int")
-    for b in reversed(pref):
-        winner = F.when(cands[b], F.lit(b)).otherwise(winner)
+
+    def by_winner(branch_value) -> str:
+        """CASE over the winning branch: the first satisfied branch in
+        preference order, NULL when none is."""
+        whens = " ".join(
+            f"WHEN {cands[b]} THEN {branch_value(b)}" for b in pref
+        )
+        return f"CASE {whens} END"
 
     subset_map = dict(aspec.subsets)
 
@@ -1075,69 +1065,37 @@ def match_pattern_alternation_fast(
         last = max(s + w - 1 for s, w in present)
         return first, last, sum(w for _, w in present)
 
-    def measure(m: Measure):
-        if m.fn == "match_number":
-            return None  # second window after the filter (below)
-        val = F.lit(None)
-        for b in reversed(pref):
-            offs = offsets[b]
-            if m.fn == "classifier":
-                last_var = max(
-                    offs.items(), key=lambda kv: kv[1][0] + kv[1][1]
-                )[0]
-                bval = F.lit(last_var)
-            else:
-                span = _span(offs, m.var)
-                if span is None:
-                    bval = (
-                        F.lit(0).cast("long")
-                        if m.fn == "count"
-                        else F.lit(None)
-                    )
-                elif m.fn == "count":
-                    bval = F.lit(span[2]).cast("long")
-                else:
-                    off = span[0] if m.fn == "first" else span[1]
-                    bval = at(m.src, off)
-            val = F.when(F.col("__b") == b, bval).otherwise(val)
-        return val
+    def branch_measure(m: Measure, b: int) -> str:
+        offs = offsets[b]
+        if m.fn == "classifier":
+            return lit(max(offs.items(), key=lambda kv: kv[1][0] + kv[1][1])[0])
+        span = _span(offs, m.var)
+        if span is None:
+            return "CAST(0 AS BIGINT)" if m.fn == "count" else "NULL"
+        if m.fn == "count":
+            return f"CAST({span[2]} AS BIGINT)"
+        return at(ident(m.src), span[0] if m.fn == "first" else span[1])
 
-    mcols = {
-        f"__m_{m.name}": measure(m)
-        for m in aspec.measures
-        if m.fn != "match_number"
-    }
     # measure leads MUST be evaluated before the filter — a lead over
     # the filtered rows would read the next MATCH, not the next row
-    out = (
-        base.withColumn("__r0", F.row_number().over(w) - 1)
-        .withColumn("__b", winner)
-        .withColumns(mcols)
-        .filter(F.col("__b").isNotNull())
-    )
-    if any(m.fn == "match_number" for m in aspec.measures):
-        # emission order is COMPLETION order (eager NFA), not start
-        # order: completion ordinal = start + L_winner - 1, start
-        # ordinal breaking same-row ties (the coordinator's merge key)
-        comp = F.lit(None).cast("long")
-        for b in reversed(pref):
-            comp = F.when(
-                F.col("__b") == b, F.col("__r0") + F.lit(lengths[b] - 1)
-            ).otherwise(comp)
-        out = out.withColumn("__comp", comp)
-        for m in aspec.measures:
-            if m.fn == "match_number":
-                out = out.withColumn(
-                    f"__m_{m.name}",
-                    F.row_number()
-                    .over(
-                        Window.partitionBy(*keys).orderBy("__comp", "__r0")
-                    )
-                    .cast("long"),
-                )
-    out = out.select(
-        *keys,
-        *[F.col(f"__m_{m.name}").alias(m.name) for m in aspec.measures],
+    out = base.selectExpr(
+        "*",
+        f"row_number() OVER ({w}) - 1 AS __r0",
+        f"{by_winner(str)} AS __b",
+        *[
+            f"{by_winner(lambda b, m=m: branch_measure(m, b))} "
+            f"AS {ident('__m_' + m.name)}"
+            for m in aspec.measures
+            if m.fn != "match_number"
+        ],
+    ).where("__b IS NOT NULL")
+    # emission order is COMPLETION order (eager NFA), not start order:
+    # completion ordinal = start + L_winner - 1, start ordinal breaking
+    # same-row ties (the coordinator's merge key)
+    comp = " ".join(f"WHEN __b = {b} THEN __r0 + {lengths[b] - 1}" for b in pref)
+    match_number = (
+        f"row_number() OVER (PARTITION BY {idents(keys)} "
+        f"ORDER BY CASE {comp} END, __r0)"
     )
     from flink_cep_examples_spark.operators.cep_batch import (
         _measure_field,
@@ -1148,8 +1106,18 @@ def match_pattern_alternation_fast(
     fields = [
         T.StructField(k, df.schema[k].dataType, True) for k in keys
     ] + [_measure_field(df, m) for m in aspec.measures]
-    return out.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in fields]
+    return _final_projection(
+        out,
+        T.StructType(fields),
+        [
+            *[ident(c) for c in keys],
+            *[
+                match_number
+                if m.fn == "match_number"
+                else ident("__m_" + m.name)
+                for m in aspec.measures
+            ],
+        ],
     )
 
 
@@ -1281,14 +1249,10 @@ def fast_group_preds_disjoint(df: DataFrame, spec) -> bool:
             per_sess = None  # WeakKeyDictionary.get calls ref(key)
         if per_sess is not None and key in per_sess:
             return per_sess[key]
-    flags = [
-        F.coalesce(F.expr(p).cast("boolean"), F.lit(False)).cast("int")
-        for p in preds
-    ]
-    total = flags[0]
-    for fl in flags[1:]:
-        total = total + fl
-    ok = df.where(total > 1).isEmpty()
+    total = " + ".join(
+        f"CAST(coalesce(CAST(({p}) AS BOOLEAN), false) AS INT)" for p in preds
+    )
+    ok = df.where(f"{total} > 1").isEmpty()
     if key is not None:
         try:
             per_sess = _ABC_SEMANTICS_MEMO.setdefault(sess, {})
@@ -1632,11 +1596,7 @@ def match_pattern_fast_loop_chain(
         branch_starts = None
     f = len(spec.variables) - ge - 1  # suffix length (round 7.2)
     n_vars = len(spec.variables)
-    within_us = (
-        int(spec.within.total_seconds() * 1_000_000)
-        if spec.within is not None
-        else None
-    )
+    within_us = _within_us(spec)
     if min_iter not in (0, 1):
         raise ValueError("min_iter must be 0 (star) or 1 (plus)")
     if min_iter == 0 and f == 0:
@@ -1982,7 +1942,7 @@ def match_pattern_fast_loop_chain_all_rows(
         _null_safe_agg_cast,
         _PRED_PREFIX,
         _TS_COL,
-        _with_nav_cols,
+        _prepare_all_rows,
         all_rows_output_schema,
     )
 
@@ -1997,22 +1957,9 @@ def match_pattern_fast_loop_chain_all_rows(
     L = ge - gs + 1
     f = len(spec.variables) - ge - 1
     n_vars = len(spec.variables)
-    within_us = (
-        int(spec.within.total_seconds() * 1_000_000)
-        if spec.within is not None
-        else None
-    )
+    within_us = _within_us(spec)
     data_cols = list(df.columns)
-    prepared = _with_nav_cols(df, spec).select(
-        *data_cols,
-        F.unix_micros(
-            F.col(spec.order_col).cast(T.TimestampType())
-        ).alias(_TS_COL),
-        *[
-            F.expr(e).alias(f"{_PRED_PREFIX}{i}")
-            for i, e in enumerate(spec.pred_exprs)
-        ],
-    )
+    prepared = _prepare_all_rows(df, spec)
     out_schema = all_rows_output_schema(df, spec)
     key_cols = list(spec.key_cols)
     tiebreak = spec.tiebreak_col
@@ -2984,7 +2931,7 @@ def match_pattern_fast_nested_chain(
         _prepare,
         _PRED_PREFIX,
         _TS_COL,
-        _with_nav_cols,
+        _prepare_all_rows,
         all_rows_output_schema,
         output_schema,
     )
@@ -3008,16 +2955,7 @@ def match_pattern_fast_nested_chain(
     f = n_vars - ge - 1
     data_cols = list(df.columns)
     if all_rows:
-        prepared = _with_nav_cols(df, spec).select(
-            *data_cols,
-            F.unix_micros(
-                F.col(spec.order_col).cast(T.TimestampType())
-            ).alias(_TS_COL),
-            *[
-                F.expr(e).alias(f"{_PRED_PREFIX}{i}")
-                for i, e in enumerate(spec.pred_exprs)
-            ],
-        )
+        prepared = _prepare_all_rows(df, spec)
         out_schema = all_rows_output_schema(df, spec)
     else:
         prepared = _prepare(df, spec)
@@ -4252,7 +4190,7 @@ def match_pattern_fast_branch_all_rows(
         _null_safe_agg_cast,
         _PRED_PREFIX,
         _TS_COL,
-        _with_nav_cols,
+        _prepare_all_rows,
         all_rows_output_schema,
     )
 
@@ -4271,16 +4209,7 @@ def match_pattern_fast_branch_all_rows(
                 (i, i - 1 if i > b_s else -1, i + 1 if i < b_e else -1)
             )
     data_cols = list(df.columns)
-    prepared = _with_nav_cols(df, spec).select(
-        *data_cols,
-        F.unix_micros(
-            F.col(spec.order_col).cast(T.TimestampType())
-        ).alias(_TS_COL),
-        *[
-            F.expr(e).alias(f"{_PRED_PREFIX}{i}")
-            for i, e in enumerate(spec.pred_exprs)
-        ],
-    )
+    prepared = _prepare_all_rows(df, spec)
     out_schema = all_rows_output_schema(df, spec)
     key_cols = list(spec.key_cols)
     tiebreak = spec.tiebreak_col

@@ -43,8 +43,16 @@ def grouped_partition_scan(
     # from spark.sql.shuffle.partitions, and AQE is free to coalesce —
     # at 100 TB the shuffle width must come from config/AQE, not from
     # the driver's core count.
-    prepared = df.repartition(*key_cols).sortWithinPartitions(
-        *key_cols, *sort_cols
+    #
+    # The columns travel under positional stand-in names: mapInPandas
+    # resolves every input column by name, and a name holding a
+    # backtick does not parse as one. The scan restores the real names.
+    names = df.columns
+    pos = {n: f"_{i}" for i, n in enumerate(names)}
+    prepared = (
+        df.toDF(*pos.values())
+        .repartition(*[pos[k] for k in key_cols])
+        .sortWithinPartitions(*[pos[c] for c in (*key_cols, *sort_cols)])
     )
 
     def scan_partition(batches):
@@ -59,6 +67,7 @@ def grouped_partition_scan(
                     yield out
 
         for pdf in batches:
+            pdf.columns = names
             if carry is not None and len(carry):
                 pdf = pd.concat([carry, pdf], ignore_index=True)
                 carry = None

@@ -15,7 +15,7 @@ Covers the reference's source surface (SURVEY §2.1):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flink_cep_examples_spark.schemas import BILLING_DATETIME_FORMAT, BILLING_SCHEMA
@@ -113,27 +113,32 @@ def events_as_billing(spark: SparkSession, sf_dir: str) -> DataFrame:
     long-vs-double does not change semantics. ``event_id`` is the
     tiebreak (unique, driver-generated).
     """
-    from flink_cep_examples_spark.sources.tables import load_table
+    from flink_cep_examples_spark.sources.tables import (
+        _events_ts_sql,
+        _read_table,
+    )
 
-    ev = load_table(spark, sf_dir, "events")
+    ev, schema = _read_table(spark, sf_dir, "events")
+    ts = _events_ts_sql(schema["ts"].dataType)
     # Project the string key FIRST, then window over the projected
     # attribute: downstream pattern matching partitions by ``id``, and
     # referencing the same attribute here lets Catalyst satisfy both
     # stages with ONE hash Exchange (cast is bijective on integers, so
     # keying by the string changes nothing; verified by
-    # tests/test_plans.py::test_cep_fast_path_single_exchange).
-    base = ev.select(
-        F.col("user_id").cast("string").alias("id"),
-        F.col("ts").alias(EVENT_TIME_COL),
-        F.col("event_id").alias(SEQ_COL),
-        F.col("value"),
+    # tests/test_plans.py::test_cep_fast_path_single_exchange). Both
+    # levels are SQL text (operators/fast_path.py module docstring).
+    base = ev.selectExpr(
+        "CAST(user_id AS STRING) AS id",
+        f"{ts} AS {EVENT_TIME_COL}",
+        f"event_id AS {SEQ_COL}",
+        "value",
     )
-    w = Window.partitionBy("id").orderBy(EVENT_TIME_COL, SEQ_COL)
-    return base.select(
+    w = f"PARTITION BY id ORDER BY {EVENT_TIME_COL}, {SEQ_COL}"
+    return base.selectExpr(
         "id",
         EVENT_TIME_COL,
         SEQ_COL,
-        F.coalesce(F.lag("value").over(w), F.lit(50.0)).alias("balanceBefore"),
-        F.col("value").alias("balanceAfter"),
-        F.date_format(EVENT_TIME_COL, "yyyy-MM-dd HH:mm:ss").alias("datetime"),
+        f"coalesce(lag(value) OVER ({w}), 50.0D) AS balanceBefore",
+        "value AS balanceAfter",
+        f"date_format({EVENT_TIME_COL}, 'yyyy-MM-dd HH:mm:ss') AS datetime",
     )

@@ -22,13 +22,24 @@ TABLE_NAMES = (
 )
 
 
+#: The runtime confs every query depends on, with the value it needs.
+SESSION_CONFS = (
+    ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+    ("spark.sql.session.timeZone", "UTC"),
+    ("spark.sql.execution.arrow.pyspark.enabled", "true"),
+)
+
+
 def ensure_session_confs(spark: SparkSession) -> None:
     """Self-heal an externally-created SparkSession (the driver harness
     passes its own): the confs every query depends on are all
-    runtime-settable. Idempotent, called from load_table."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    runtime-settable. A conf is written only when the session's value
+    differs, so a correctly configured session is never written to by
+    a query. Called from load_table."""
+    conf = spark.conf
+    for key, value in SESSION_CONFS:
+        if conf.get(key) != value:
+            conf.set(key, value)
 
 
 #: ((path, st_mtime_ns, st_size) → StructType) parquet-footer memo —
@@ -37,28 +48,43 @@ def ensure_session_confs(spark: SparkSession) -> None:
 _SCHEMA_CACHE: dict = {}
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one synthetic table. Parquet → full predicate pushdown and
-    column pruning from Catalyst; no schema inference needed (parquet is
+def _events_ts_sql(dt: T.DataType) -> str:
+    """SQL text of ``events.ts`` normalized to a session-UTC
+    ``TimestampType``, given the type the parquet file holds it in.
+
+    TIMESTAMP(NANOS) arrives as int64 nanos (``nanosAsLong``) and is
+    truncated to µs exactly as DuckDB truncates: ``ts div 1000`` is
+    integer division — a float division would promote ~1.7e18 values
+    past double's 2^53 exact range and can land 1 µs off DuckDB's exact
+    integer truncation, enough to flip boundary ``within`` checks.
+    timestamp[us] without tz arrives TIMESTAMP_NTZ; a cast under the UTC
+    session tz is value-preserving. The cast names TIMESTAMP_LTZ, not
+    the ``TIMESTAMP`` alias: the alias follows spark.sql.timestampType,
+    so a caller setting that conf to TIMESTAMP_NTZ would make the cast a
+    silent no-op."""
+    if isinstance(dt, T.LongType):
+        return "timestamp_micros(ts div 1000)"
+    if isinstance(dt, T.TimestampNTZType):
+        return "CAST(ts AS TIMESTAMP_LTZ)"
+    return "ts"
+
+
+def _read_table(
+    spark: SparkSession, sf_dir: str, name: str
+) -> tuple[DataFrame, T.StructType]:
+    """One synthetic table exactly as its parquet file holds it, and
+    its schema. Parquet → full predicate pushdown and column pruning
+    from Catalyst; no schema inference needed (parquet is
     self-describing).
 
-    ``events.ts`` is normalized to a session-UTC ``TimestampType``
-    regardless of how the driver generated the parquet that round:
-    TIMESTAMP(NANOS) (with ``nanosAsLong`` it arrives as int64 nanos,
-    truncated here to µs exactly as DuckDB truncates) or timestamp[us]
-    without tz (arrives TIMESTAMP_NTZ; a cast under the UTC session tz
-    is value-preserving), keeping every downstream query
-    oracle-comparable.
-
-    The parquet schema is memoized per (sf_dir, name) (round-17,
-    guide §1.2): without an explicit schema every ``read.parquet``
-    launches a footer-read job at PLAN-CONSTRUCTION time, so a query
-    referencing N tables paid N driver jobs per invocation before any
-    data moved. The cache holds metadata only (a StructType — never
-    rows), is per-process, and is keyed on the path's
-    ``(st_mtime_ns, st_size)`` too, so a file rewritten at the same
-    path is read afresh. A path that cannot be stat'ed (a remote URI)
-    is not memoized."""
+    The parquet schema is memoized (guide §1.2): without an explicit
+    schema every ``read.parquet`` launches a footer-read job at
+    PLAN-CONSTRUCTION time, so a query referencing N tables paid N
+    driver jobs per invocation before any data moved. The cache holds
+    metadata only (a StructType — never rows), is per-process, and is
+    keyed on the path's ``(st_mtime_ns, st_size)`` too, so a file
+    rewritten at the same path is read afresh. A path that cannot be
+    stat'ed (a remote URI) is not memoized."""
     ensure_session_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
     sig = stat_signature(path)
@@ -66,23 +92,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
         df = spark.read.parquet(path)
+        schema = df.schema
         if sig is not None:
-            _SCHEMA_CACHE[key] = df.schema
+            _SCHEMA_CACHE[key] = schema
     else:
         df = spark.read.schema(schema).parquet(path)
+    return df, schema
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Load one synthetic table (:func:`_read_table`), with ``events.ts``
+    normalized to a session-UTC ``TimestampType`` regardless of how the
+    driver generated the parquet that round (:func:`_events_ts_sql`),
+    keeping every downstream query oracle-comparable."""
+    df, schema = _read_table(spark, sf_dir, name)
     if name == "events":
-        dt = df.schema["ts"].dataType
-        if isinstance(dt, T.LongType):
-            # `ts div 1000` is integer division on the int64 nanos. A float
-            # division (`/ 1000` then cast) would promote ~1.7e18 values past
-            # double's 2^53 exact range and can land 1 µs off DuckDB's exact
-            # integer truncation — enough to flip boundary `within` checks.
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif isinstance(dt, T.TimestampNTZType):
-            # Cast to the concrete LTZ type, not the "timestamp" alias: the
-            # alias resolves via spark.sql.timestampType, so a caller setting
-            # that conf to TIMESTAMP_NTZ would make the cast a silent no-op.
-            df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+        ts = _events_ts_sql(schema["ts"].dataType)
+        if ts != "ts":
+            df = df.withColumn("ts", F.expr(ts))
     return df
 
 

@@ -121,6 +121,27 @@ def test_absence_fast_path_single_exchange_no_python(spark, sf_small):
     assert "Python" not in p and "mapInPandas" not in p.lower()
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "cep_alerts_with_timeouts",  # A B* C with timeouts
+        "cep_match_recognize_all_rows",  # A B* C, all rows per match
+        "cep_alternation_pattern",  # fixed-width alternation
+        "cep_permute_pattern",  # PERMUTE
+    ],
+)
+def test_closed_form_kernels_single_hash_exchange_no_python(
+    spark, sf_small, name
+):
+    """The SQL-text closed forms keep their plan: the source's window
+    and every kernel level share ONE hash Exchange on the key, and no
+    Python stage runs."""
+    p = _plan(QUERIES[name](spark, sf_small))
+    assert p.count("Exchange") == 1, p
+    assert "Exchange hashpartitioning(id" in p, p
+    assert "Python" not in p and "InPandas" not in p, p
+
+
 def test_exists_plans_as_semi_join(plans):
     """Q4's EXISTS must run as LeftSemi (probe-side dedup inside the
     join, match multiplicity never materialized) — not an inner join +

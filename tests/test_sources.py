@@ -12,7 +12,12 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import types as T
 
-from flink_cep_examples_spark.sources.tables import load_table
+from flink_cep_examples_spark.sources.billing import events_as_billing
+from flink_cep_examples_spark.sources.tables import (
+    SESSION_CONFS,
+    ensure_session_confs,
+    load_table,
+)
 
 
 def test_events_ts_is_ltz_under_ntz_session_conf(spark, sf_small):
@@ -27,6 +32,8 @@ def test_events_ts_is_ltz_under_ntz_session_conf(spark, sf_small):
         assert isinstance(df.schema["ts"].dataType, T.TimestampType)
         # and the values still read under the pinned UTC session tz
         assert df.limit(1).collect()[0].ts is not None
+        ev = events_as_billing(spark, sf_small)
+        assert isinstance(ev.schema["event_time"].dataType, T.TimestampType)
     finally:
         spark.conf.set("spark.sql.timestampType", saved)
 
@@ -64,3 +71,25 @@ def test_schema_memo_is_keyed_on_file_identity(spark, tmp_path):
     df = load_table(spark, str(tmp_path), "t")
     assert df.columns == ["b", "c"]
     assert [tuple(r) for r in df.collect()] == [("x", 3.5)]
+
+
+def test_configured_session_conf_is_never_written(spark, sf_small, monkeypatch):
+    """A session that already holds every required value is only read:
+    no query path writes session-wide conf."""
+    for key, value in SESSION_CONFS:
+        assert spark.conf.get(key) == value
+    writes = []
+    monkeypatch.setattr(spark.conf, "set", lambda *kv: writes.append(kv))
+    ensure_session_confs(spark)
+    load_table(spark, sf_small, "events")
+    events_as_billing(spark, sf_small)
+    assert writes == []
+
+
+def test_changed_session_time_zone_is_healed(spark):
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        ensure_session_confs(spark)
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")

@@ -10,6 +10,11 @@ For each headline bench query:
     plan text alone never shows
   - summarize plan shape: #Exchange, #ArrowEvalPython/BatchEvalPython,
     join strategies, #scans
+  - time driver-side plan construction (the query function call alone)
+    and count the py4j commands it sends, leaving out the ``m`` memory
+    releases garbage collection interleaves (cepbench/spans.py's
+    Py4jCounter): ``construct_s`` (min over the timed calls) and
+    ``construct_py4j`` (the first timed call, on a warm schema memo)
 
 Usage:
   python tools/perf_profile.py [--tag before] [--queries a,b,c]
@@ -30,7 +35,10 @@ import time
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
+sys.path.insert(0, os.path.join(HERE, "cepbench"))
+
 from bench import HEADLINE  # noqa: E402
+from spans import Py4jCounter  # noqa: E402
 from flink_cep_examples_spark.queries import QUERIES, load_all  # noqa: E402
 from flink_cep_examples_spark.session import get_spark  # noqa: E402
 
@@ -66,6 +74,14 @@ def plan_shape(plan: str) -> dict:
     }
 
 
+def construct(counter, fn, spark, sf_dir):
+    """One query-function call alone: (DataFrame, seconds, py4j commands)."""
+    c0 = counter.count
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    return df, time.perf_counter() - t0, counter.count - c0
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--tag", default="before")
@@ -83,6 +99,8 @@ def main() -> None:
     names = (
         args.queries.split(",") if args.queries else [n for n in HEADLINE if n in QUERIES]
     )
+    counter = Py4jCounter()
+    counter.install()
     spark = get_spark(app_name=f"perf-profile-{args.tag}")
     sc = spark.sparkContext
     st = sc.statusTracker()
@@ -105,7 +123,8 @@ def main() -> None:
             group = f"prof-{name}"
             sc.setJobGroup(group, name)
             t0 = time.perf_counter()
-            fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
+            df, construct_s, construct_py4j = construct(counter, fn, spark, args.sf_dir)
+            df.write.format("noop").mode("overwrite").save()
             first = time.perf_counter() - t0
             job_ids = st.getJobIdsForGroup(group)
             n_stages = 0
@@ -121,16 +140,21 @@ def main() -> None:
                         n_tasks += si.numTasks
             sc.setJobGroup(f"prof-{name}-t", name)
             times = [first]
+            construct_times = [construct_s]
             for _ in range(args.samples - 1):
                 t0 = time.perf_counter()
-                fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
+                df, c_s, _ = construct(counter, fn, spark, args.sf_dir)
+                df.write.format("noop").mode("overwrite").save()
                 times.append(time.perf_counter() - t0)
+                construct_times.append(c_s)
             times_s = sorted(times)
             rec.update(
                 {
                     "min_s": round(times_s[0], 3),
                     "med_s": round(times_s[len(times_s) // 2], 3),
                     "all_s": [round(t, 3) for t in times],
+                    "construct_s": round(min(construct_times), 4),
+                    "construct_py4j": construct_py4j,
                     "jobs": len(job_ids),
                     "stages": n_stages,
                     "tasks": n_tasks,
@@ -138,7 +162,9 @@ def main() -> None:
             )
         summary[name] = rec
         print(
-            f"{name}: {rec.get('min_s', '-')}s min, jobs={rec.get('jobs', '-')}, "
+            f"{name}: {rec.get('min_s', '-')}s min, "
+            f"construct={rec.get('construct_s', '-')}s/"
+            f"{rec.get('construct_py4j', '-')} py4j, jobs={rec.get('jobs', '-')}, "
             f"stages={rec.get('stages', '-')}, plan={rec['plan']}",
             flush=True,
         )
